@@ -3,6 +3,7 @@ package graft.runs
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.functions.{coalesce, col, lit, struct}
 import org.apache.spark.sql.{Column, Dataset, Encoder, SaveMode, SparkSession}
 
 /** A tiny MERGE-capable table stored as versioned parquet snapshots
@@ -11,8 +12,8 @@ import org.apache.spark.sql.{Column, Dataset, Encoder, SaveMode, SparkSession}
   *
   * Emulates `INSERT ... ON DUPLICATE KEY UPDATE` (reference:
   * Runs.scala:77-103, RunStatus.scala:63-85 via Quill/MySQL) with
-  * pure DataFrame ops: `existing ANTI-JOIN incoming-keys UNION
-  * incoming`, written as a NEW immutable snapshot directory and
+  * pure DataFrame ops: `existing WHERE key NOT IN incoming-keys
+  * UNION incoming`, written as a NEW immutable snapshot directory and
   * committed by atomically creating the next numbered manifest file.
   *
   * Layout:
@@ -20,6 +21,13 @@ import org.apache.spark.sql.{Column, Dataset, Encoder, SaveMode, SparkSession}
   *   <path>/_manifests/v0000000007   # text: name of the live snapshot dir
   *   <path>/snap-1a2b3c4d/           # immutable parquet snapshots
   * }}}
+  *
+  * `migrate` commits v1 as a manifest that names no snapshot
+  * ([[ParquetTable.EmptySnapshot]]), which reads as the empty table,
+  * so creating a table runs no Spark write. Every read passes the
+  * encoder's schema to `spark.read`, so no read runs a parquet
+  * schema-inference job; a manifest that names neither a snapshot
+  * nor the empty table (a torn write) fails loud.
   *
   * The commit point is `fs.create(manifest, overwrite = false)` — an
   * atomic create-if-absent everywhere (HDFS, local, S3 conditional
@@ -42,9 +50,16 @@ import org.apache.spark.sql.{Column, Dataset, Encoder, SaveMode, SparkSession}
   * lock that later writers break after `StaleLockMs`. Readers never
   * lock or retry: manifests only ever appear.
   *
-  * Rows are typed; keys are column names. The table is run-metadata
-  * sized (thousands of rows), but every operation is expressed
-  * relationally, so nothing here breaks if it grows by 10^6.
+  * Cost: each mutation is one commit. `upsert` and `delete` run one
+  * Spark job (the snapshot write), `update` two (one bounded collect
+  * of its matches, then the write). Callers batch: a stage commits
+  * each ledger table once per phase, not once per output (see
+  * [[RunStatus.open]], [[Runs.insert]]).
+  *
+  * Rows are typed; keys are column names, unique within the table:
+  * an upsert batch with a repeated key is refused. The table is
+  * run-metadata sized (thousands of rows), but every operation is
+  * expressed relationally, so nothing here breaks if it grows by 10^6.
   */
 final class ParquetTable[T: Encoder](
     spark: SparkSession,
@@ -54,8 +69,6 @@ final class ParquetTable[T: Encoder](
     maxUpdateRows: Long = ParquetTable.MaxUpdateRows
 ) {
 
-  import spark.implicits._
-
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -64,7 +77,10 @@ final class ParquetTable[T: Encoder](
   /** Committed snapshots retained (manifests + their data dirs). */
   private val KeepManifests = 3
 
-  def exists: Boolean = currentManifest().isDefined
+  /** Every read passes this to `spark.read`: no schema inference. */
+  private val schema = implicitly[Encoder[T]].schema
+
+  def exists: Boolean = versions.nonEmpty
 
   private val lockPath = new Path(path + ".lock")
 
@@ -109,41 +125,43 @@ final class ParquetTable[T: Encoder](
     finally fs.delete(lockPath, false)
   }
 
-  /** (version, snapshot dir name) of the latest committed manifest. */
-  private def currentManifest(): Option[(Long, String)] = {
-    val f = fs
-    if (!f.exists(manifestDir)) return None
-    val versions = f.listStatus(manifestDir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.matches("v\\d{10}"))
-      .map(_.drop(1).toLong)
-    if (versions.isEmpty) None
-    else {
-      val v    = versions.max
-      val mf   = new Path(manifestDir, f"v$v%010d")
-      val in   = f.open(mf)
-      val snap =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      Some((v, snap))
-    }
+  private def manifestPath(version: Long): Path = new Path(manifestDir, f"v$version%010d")
+
+  /** The snapshot dir name a manifest records. */
+  private def readManifest(version: Long): String = {
+    val in = fs.open(manifestPath(version))
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+    finally in.close()
   }
 
+  /** (version, snapshot dir name) of the latest committed manifest;
+    * a table no one created is version 0, read as empty.
+    */
+  private def currentManifest(): (Long, String) =
+    versions.lastOption.fold((0L, ParquetTable.EmptySnapshot))(v => (v, readManifest(v)))
+
+  /** The table a manifest names, read with the encoder's schema. */
+  private def read(snap: String): Dataset[T] =
+    if (snap == ParquetTable.EmptySnapshot) spark.emptyDataset[T]
+    else if (snap.startsWith("snap-"))
+      spark.read.schema(schema).parquet(new Path(path, snap).toString).as[T]
+    else
+      throw new IllegalStateException(
+        s"a manifest of $path names neither a snapshot nor the empty table: '$snap'")
+
   /** Idempotent create (reference `migrate()`: CREATE TABLE IF NOT
-    * EXISTS, Runs.scala:36-45).
+    * EXISTS, Runs.scala:36-45). Commits v1 as the empty-table
+    * manifest: no snapshot is written.
     */
   def migrate(): Unit = withWriterLock {
-    if (!exists) commitSnapshot(spark.emptyDataset[T])
+    if (!exists) publish(ParquetTable.EmptySnapshot, 1L)
   }
 
   /** The table at its latest committed version. The returned Dataset
     * is pinned to that snapshot's immutable directory — later commits
     * do not disturb it (snapshot isolation for in-flight readers).
     */
-  def ds: Dataset[T] = currentManifest() match {
-    case Some((_, snap)) => spark.read.parquet(new Path(path, snap).toString).as[T]
-    case None            => spark.emptyDataset[T]
-  }
+  def ds: Dataset[T] = read(currentManifest()._2)
 
   def all(): Seq[T] = ds.collect().toSeq
 
@@ -166,38 +184,42 @@ final class ParquetTable[T: Encoder](
     * listed version reads consistently while GC'd ones fail loud.
     */
   def dsAt(version: Long): Dataset[T] = {
-    val f  = fs
-    val mf = new Path(manifestDir, f"v$version%010d")
-    if (!f.exists(mf))
+    if (!fs.exists(manifestPath(version)))
       throw new NoSuchElementException(
         s"version $version of $path does not exist or was garbage-collected " +
           s"(retained: ${versions.mkString(", ")})")
-    val in   = f.open(mf)
-    val snap =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    spark.read.parquet(new Path(path, snap).toString).as[T]
+    read(readManifest(version))
   }
 
   def isEmpty: Boolean = ds.isEmpty
 
-  /** Upsert: replace any existing row with the same key columns. */
+  /** Upsert: replace any existing row with the same key columns. A
+    * batch that repeats a key is refused before anything is written:
+    * both rows would land, and readers would pick one arbitrarily.
+    */
   def upsert(rows: Seq[T]): Unit = {
     if (rows.isEmpty) return
-    withWriterLock {
-      val incoming = spark.createDataset(rows)
-      val kept     = ds.join(incoming.select(keyCols.map(c => $"$c"): _*), keyCols, "left_anti").as[T]
-      commitSnapshot(kept.unionByName(incoming))
+    val incoming = spark.createDataset(rows)
+    // a local relation: collecting it runs no Spark job
+    val keys     = incoming.select(keyCols.map(col): _*).collect()
+    val repeated = keys.groupBy(_.toSeq).collect {
+      case (k, hits) if hits.length > 1 => k.mkString("(", ", ", ")")
     }
+    require(repeated.isEmpty,
+      s"upsert into $path repeats ${repeated.size} key(s) of (${keyCols.mkString(", ")}) " +
+        s"within one batch, e.g. ${repeated.take(3).mkString(", ")}")
+    // the anti-join against the batch's keys as one IN predicate over
+    // key structs: a join would broadcast the batch, one more job
+    def key(values: Seq[Column]) =
+      struct(keyCols.zip(values).map { case (c, v) => v.as(c) }: _*)
+    val replaced = key(keyCols.map(col)).isin(keys.map(r => key(r.toSeq.map(lit))).toSeq: _*)
+    rewrite(live => live.filter(!replaced).unionByName(incoming))
   }
 
   /** Delete all rows matching the predicate (null-safe: a null
     * predicate result keeps the row).
     */
-  def delete(pred: Column): Unit = withWriterLock {
-    commitSnapshot(ds.filter(!org.apache.spark.sql.functions.coalesce(
-      pred, org.apache.spark.sql.functions.lit(false))))
-  }
+  def delete(pred: Column): Unit = rewrite(_.filter(!coalesce(pred, lit(false))))
 
   /** Point update: transform matching rows, keep the rest.
     *
@@ -207,38 +229,47 @@ final class ParquetTable[T: Encoder](
     * trade for this store's job — KB-scale runs/bookkeeping rows,
     * the reference's analog being MySQL point updates — and wrong
     * for any data-scale table, so the materialized side is capped at
-    * [[ParquetTable.MaxUpdateRows]]: a predicate matching more rows
-    * fails loud instead of OOMing the driver. Data-scale rewrites
-    * belong in [[graft.operators.Merge.upsertParquet]] (partition-
-    * pruned, fully distributed).
+    * [[ParquetTable.MaxUpdateRows]]: one bounded collect of at most
+    * one row past the cap both fetches the matches and enforces the
+    * fence, so a predicate matching more rows fails loud instead of
+    * running the caller out of memory. Data-scale rewrites belong in
+    * [[graft.operators.Merge.upsertParquet]] (partition-pruned, fully
+    * distributed).
     */
-  def update(pred: Column)(f: T => T): Unit = withWriterLock {
-    val toTouch = ds.filter(pred)
-    val n = toTouch.count()
-    require(n <= maxUpdateRows,
-      s"update() matched $n rows of $path — this point-update API " +
-      s"materializes matches on the driver and is fenced to " +
-      s"$maxUpdateRows rows (metadata-scale). Use a " +
-      "distributed rewrite (operators.Merge) for data-scale tables.")
-    val matched = toTouch.collect().toSeq.map(f)
-    val rest    = ds.filter(!org.apache.spark.sql.functions.coalesce(
-      pred, org.apache.spark.sql.functions.lit(false)))
-    commitSnapshot(rest.unionByName(spark.createDataset(matched)))
+  def update(pred: Column)(f: T => T): Unit = {
+    val hit = coalesce(pred, lit(false))
+    rewrite { live =>
+      val matched = live.filter(hit).limit(math.min(maxUpdateRows + 1, Int.MaxValue).toInt).collect()
+      require(matched.length <= maxUpdateRows,
+        s"update() matched more than $maxUpdateRows rows of $path — this point-update " +
+          s"API materializes matches in the calling process and is fenced to " +
+          s"$maxUpdateRows rows (metadata-scale). Use a " +
+          "distributed rewrite (operators.Merge) for data-scale tables.")
+      live.filter(!hit).unionByName(spark.createDataset(matched.toSeq.map(f)))
+    }
   }
 
-  /** Write `data` as a fresh immutable snapshot dir, then COMMIT by
-    * atomically creating the next numbered manifest — the only
-    * mutation the table's visible state ever sees. Must be called
-    * with the writer lock held. Retains the last [[KeepManifests]]
-    * versions and garbage-collects everything older.
+  /** Under the writer lock, resolve the live snapshot once, derive
+    * the next table from it, write that as a fresh immutable snapshot
+    * dir (the one Spark job of a commit) and publish it as the next
+    * version.
     */
-  private def commitSnapshot(data: Dataset[T]): Unit = {
-    val f    = fs
-    val snap = "snap-" + UUID.randomUUID().toString.take(8)
-    data.coalesce(1).write.mode(SaveMode.Overwrite)
+  private def rewrite(next: Dataset[T] => Dataset[T]): Unit = withWriterLock {
+    val (version, live) = currentManifest()
+    val snap            = "snap-" + UUID.randomUUID().toString.take(8)
+    next(read(live)).coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(new Path(path, snap).toString)
-    val ver      = currentManifest().map(_._1).getOrElse(0L) + 1L
-    val manifest = new Path(manifestDir, f"v$ver%010d")
+    publish(snap, version + 1L)
+  }
+
+  /** COMMIT `snap` as `version` by atomically creating its manifest —
+    * the only mutation the table's visible state ever sees. Must be
+    * called with the writer lock held. Retains the last
+    * [[KeepManifests]] versions and garbage-collects everything older.
+    */
+  private def publish(snap: String, version: Long): Unit = {
+    val f        = fs
+    val manifest = manifestPath(version)
     f.mkdirs(manifestDir)
     // the commit point: atomic create-if-absent of the next numbered
     // manifest. Under the writer lock a collision means another
@@ -248,27 +279,21 @@ final class ParquetTable[T: Encoder](
     // the committed state is untouched. Fail loud, never clobber.
     if (!commit.createIfAbsent(f, manifest, snap.getBytes("UTF-8")))
       throw new java.util.ConcurrentModificationException(
-        s"commit of version $ver at $path lost the race: $manifest already " +
+        s"commit of version $version at $path lost the race: $manifest already " +
           "exists — another writer committed concurrently; this writer's " +
           "snapshot is unreferenced and will be garbage-collected")
-    gc(f, ver)
+    gc(version)
   }
 
   /** Drop manifests older than the retention window and any snapshot
     * dir no retained manifest references. Failures here never affect
     * the committed state — GC is advisory cleanup.
     */
-  private def gc(f: FileSystem, latest: Long): Unit = {
-    val cutoff = latest - (KeepManifests - 1)
-    val stats  = f.listStatus(manifestDir).toSeq
-      .filter(_.getPath.getName.matches("v\\d{10}"))
-    val (old, keep) = stats.partition(_.getPath.getName.drop(1).toLong < cutoff)
-    val live = keep.map { st =>
-      val in = f.open(st.getPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }.toSet
-    old.foreach(st => f.delete(st.getPath, false))
+  private def gc(latest: Long): Unit = {
+    val f           = fs
+    val (old, keep) = versions.partition(_ < latest - (KeepManifests - 1))
+    val live        = keep.map(readManifest).toSet
+    old.foreach(v => f.delete(manifestPath(v), false))
     f.listStatus(new Path(path)).toSeq
       .map(_.getPath)
       .filter(p => p.getName.startsWith("snap-") && !live(p.getName))
@@ -282,6 +307,9 @@ object ParquetTable {
     * far below anything data-scale.
     */
   val MaxUpdateRows: Long = 100000L
+
+  /** What a manifest records for the empty table `migrate` commits. */
+  val EmptySnapshot: String = "empty"
 
   private val monitors = scala.collection.concurrent.TrieMap.empty[String, AnyRef]
 

@@ -57,14 +57,19 @@ final class Runs(spark: SparkSession, path: String, project: String, method: Str
       .collect()
       .toSeq
 
-  /** Batch upsert of an output's inputs: on duplicate key, the row's
+  /** Upsert of one output's inputs: on duplicate key, the row's
     * `version` and `timestamp` are replaced (reference: Runs.scala:77-103).
     */
-  def insert(stage: String, output: String, inputs: Seq[Input]): Unit = {
-    migrate()
+  def insert(stage: String, output: String, inputs: Seq[Input]): Unit =
+    insert(stage, Seq(output -> inputs))
+
+  /** Upsert of every (output, input) row a stage built, as one commit
+    * with one shared run timestamp.
+    */
+  def insert(stage: String, outputs: Iterable[(String, Iterable[Input])]): Unit = {
     val now = Instant.now
-    table.upsert(inputs.map { i =>
-      RunRow(project, method, stage, i.key, i.version, output, now)
+    table.upsert(outputs.toSeq.flatMap { case (output, inputs) =>
+      inputs.map(i => RunRow(project, method, stage, i.key, i.version, output, now))
     })
   }
 
@@ -100,24 +105,38 @@ final class RunStatus(spark: SparkSession, path: String, project: String, method
       .toSeq
 
   /** Insert (or conflict-reset) an output row. */
-  def insert(stage: String, output: String): Unit = {
-    migrate()
-    table.upsert(Seq(
-      RunStatusRow(project, method, stage, output, None, None, Instant.now)))
+  def insert(stage: String, output: String): Unit =
+    reset(stage, Seq(output), started = None)
+
+  /** Open a batch of outputs for building, as one commit: each row is
+    * (conflict-)reset with `started = created = now` and `ended`
+    * empty — the row `insert` followed by `start` leaves.
+    */
+  def open(stage: String, outputs: Seq[String]): Unit =
+    reset(stage, outputs, started = Some(Instant.now))
+
+  private def reset(stage: String, outputs: Seq[String], started: Option[Instant]): Unit = {
+    val now = started.getOrElse(Instant.now)
+    table.upsert(outputs.map(o => RunStatusRow(project, method, stage, o, started, None, now)))
   }
 
-  private def keyPred(stage: String, output: String) =
+  private def keyPred(stage: String, outputs: Seq[String]) =
     col("project") === project && col("method") === method &&
-      col("stage") === stage && col("output") === output
+      col("stage") === stage && col("output").isin(outputs: _*)
 
   /** Mark an output as started (reference: RunStatus.scala:88-99). */
   def start(stage: String, output: String): Unit =
-    table.update(keyPred(stage, output))(_.copy(started = Some(Instant.now)))
+    table.update(keyPred(stage, Seq(output)))(_.copy(started = Some(Instant.now)))
 
   /** Mark an output as ended (reference: RunStatus.scala:102-113). */
-  def end(stage: String, output: String): Unit =
-    table.update(keyPred(stage, output))(_.copy(ended = Some(Instant.now)))
+  def end(stage: String, output: String): Unit = end(stage, Seq(output))
+
+  /** Mark outputs as ended, as one commit. */
+  def end(stage: String, outputs: Seq[String]): Unit = {
+    val now = Some(Instant.now)
+    table.update(keyPred(stage, outputs))(_.copy(ended = now))
+  }
 
   def delete(stage: String, output: String): Unit =
-    table.delete(keyPred(stage, output))
+    table.delete(keyPred(stage, Seq(output)))
 }

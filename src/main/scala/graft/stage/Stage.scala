@@ -1,5 +1,6 @@
 package graft.stage
 
+import java.time.Instant
 import java.util.concurrent.Executors
 
 import scala.concurrent.duration.Duration
@@ -115,11 +116,14 @@ abstract class Stage(implicit val context: Context) {
   /** The incremental planner (reference: Stage.scala:221-267): list
     * inputs, map to outputs, then per output drop inputs whose
     * recorded run timestamp is strictly after the input's version —
-    * equal timestamps reprocess (`isAfter`, Stage.scala:256).
+    * equal timestamps reprocess (`isAfter`, Stage.scala:256). The
+    * prior runs are indexed once by (output, input), so the diff is
+    * linear in outputs, inputs and runs.
     */
   def getWork(opts: Opts): Map[String, Set[Input]] = {
-    val lastOutputs =
-      if (opts.reprocess()) Seq.empty else context.runs.of(getName)
+    val lastRun =
+      if (opts.reprocess()) Map.empty[(String, String), Instant]
+      else context.runs.of(getName).iterator.map(r => (r.output, r.input) -> r.timestamp).toMap
 
     val inputs    = sources.flatMap(_.inputs(context.inputRoot)(context.spark))
     val outputMap = buildOutputMap(inputs, opts)
@@ -127,24 +131,20 @@ abstract class Stage(implicit val context: Context) {
     if (opts.showInputs()) inputs.foreach(i => println(s"...found input ${i.key}"))
 
     val updatedOutputMap = outputMap.map { case (output, ins) =>
-      val results = lastOutputs.filter(_.output == output)
-      val newInputs = ins.filter { input =>
-        results.find(_.input == input.key) match {
-          case Some(result) if result.timestamp.isAfter(input.version) => false
-          case _                                                       => true
-        }
-      }
-      output -> newInputs
+      output -> ins.filterNot(in => lastRun.get((output, in.key)).exists(_.isAfter(in.version)))
     }
 
     updatedOutputMap.filter { case (_, ins) => ins.nonEmpty }
   }
 
-  /** Record what was built (reference: Stage.scala:269-276). */
+  /** Record what was built (reference: Stage.scala:269-276): one runs
+    * commit of every (output, input) row, then one runstatus commit
+    * that ends every output.
+    */
   def insertRuns(outputs: Map[String, Set[Input]]): Unit =
-    for ((output, inputs) <- outputs.toList.sortBy(_._1)) {
-      context.runs.insert(getName, output, inputs.toList)
-      context.runStatus.end(getName, output)
+    if (outputs.nonEmpty) {
+      context.runs.insert(getName, outputs)
+      context.runStatus.end(getName, outputs.keys.toSeq.sorted)
     }
 
   /** Log the work that would run; true if any (Stage.scala:282-295). */
@@ -160,14 +160,14 @@ abstract class Stage(implicit val context: Context) {
   /** Build every stale output with ≤ `--clusters` in flight
     * (reference: Stage.scala:110-162 provisions ≤N EMR clusters; here
     * a bounded pool shares the SparkSession — the scheduler
-    * interleaves the jobs' stages across executors).
+    * interleaves the jobs' stages across executors). Every output is
+    * opened in one runstatus commit before the first job starts. If a
+    * job throws, the others still run to their end, then a job's
+    * failure is rethrown and no `success` callback runs.
     */
   def processOutputs(outputMap: Map[String, Set[Input]], opts: Opts): Unit = {
     val outputs = outputMap.keys.toList.sorted
-    outputs.foreach { o =>
-      context.runStatus.insert(getName, o)
-      context.runStatus.start(getName, o)
-    }
+    context.runStatus.open(getName, outputs)
 
     val pool = Executors.newFixedThreadPool(math.min(opts.clusters(), math.max(outputs.size, 1)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -188,6 +188,9 @@ abstract class Stage(implicit val context: Context) {
           output
         }
       }
+      // settle every job before failing, so none still writes its
+      // output after this returns
+      futures.foreach(Await.ready(_, Duration.Inf))
       Await.result(Future.sequence(futures), Duration.Inf).foreach(success)
     } finally pool.shutdown()
   }
@@ -197,8 +200,7 @@ abstract class Stage(implicit val context: Context) {
     getWork(opts) match {
       case outputMap if outputMap.isEmpty => ()
       case outputMap if opts.insertRuns() =>
-        outputMap.keys.foreach(o => context.runStatus.insert(getName, o))
-        outputMap.keys.foreach(o => context.runStatus.start(getName, o))
+        context.runStatus.open(getName, outputMap.keys.toList.sorted)
         insertRuns(outputMap)
         outputMap.keys.foreach(success)
       case outputMap =>

@@ -210,11 +210,74 @@ final class ParquetTableSpec extends SparkTestBase {
       table.update(org.apache.spark.sql.functions.lit(true)) { case (k, v) => (k, v + 1) }
     }
     assert(err.getMessage.contains("fenced"))
+    assert(err.getMessage.contains("more than 2 rows"))
     assert(table.all().toSet == before)
     // under the cap the point update still works, matched-side only
     table.update(org.apache.spark.sql.functions.col("_1") === "a") {
       case (k, v) => (k, v + 10)
     }
     assert(table.all().toSet == Set(("a", 11L), ("b", 2L), ("c", 3L)))
+  }
+
+  // ---- what a commit costs ----
+
+  test("migrate commits v1 naming no snapshot; reads see the empty table") {
+    val table = newTable("pt-migrate")
+    assert(jobsOf(table.migrate()) == 0, "creating a table runs no Spark job")
+    assert(table.versions == Seq(1L))
+    val root = new Path(table.path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.listStatus(root).exists(_.getPath.getName.startsWith("snap-")))
+    assert(table.exists && table.isEmpty && table.all().isEmpty)
+    assert(table.dsAt(1L).collect().isEmpty)
+    table.migrate() // idempotent: no second version
+    assert(table.versions == Seq(1L))
+  }
+
+  test("each commit runs one Spark job: upsert 1, update 2, delete 1, Runs.of 1") {
+    val table = newTable("pt-jobs")
+    table.migrate()
+    assert(jobsOf(table.upsert(Seq(("a", 1L), ("b", 2L)))) == 1)
+    assert(jobsOf(table.upsert(Seq(("a", 3L), ("c", 4L)))) == 1)
+    assert(jobsOf(table.update(org.apache.spark.sql.functions.col("_1") === "a") {
+      case (k, v) => (k, v + 10)
+    }) == 2)
+    assert(jobsOf(table.delete(org.apache.spark.sql.functions.col("_1") === "c")) == 1)
+    assert(table.all().toSet == Set(("a", 13L), ("b", 2L)))
+
+    val runs = new Runs(spark, tmpDir("pt-jobs-runs") + "/runs", "test", "TestMethod")
+    assert(jobsOf(runs.migrate()) == 0)
+    runs.insert("S", Seq(
+      "o1" -> Seq(graft.core.Input("i1", java.time.Instant.EPOCH)),
+      "o2" -> Seq(graft.core.Input("i2", java.time.Instant.EPOCH))))
+    var rows = Seq.empty[RunRow]
+    assert(jobsOf { rows = runs.of("S") } == 1, "a read runs no schema-inference job")
+    assert(rows.map(r => (r.output, r.input)).toSet == Set(("o1", "i1"), ("o2", "i2")))
+  }
+
+  test("upsert refuses a batch that repeats a key; the table is untouched") {
+    val table = newTable("pt-dupkey")
+    table.migrate()
+    table.upsert(Seq(("a", 1L)))
+    val before = table.versions
+    val err = intercept[IllegalArgumentException] {
+      table.upsert(Seq(("b", 1L), ("c", 5L), ("b", 2L)))
+    }
+    assert(err.getMessage.contains("repeats 1 key"), err.getMessage)
+    assert(err.getMessage.contains("(b)"), err.getMessage)
+    assert(table.versions == before)
+    assert(table.all().toSet == Set(("a", 1L)))
+  }
+
+  test("a manifest naming neither a snapshot nor the empty table fails loud") {
+    val table = newTable("pt-torn")
+    table.migrate()
+    table.upsert(Seq(("a", 1L)))
+    val mf = new Path(table.path, "_manifests/v0000000003")
+    val fs = mf.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(mf, false).close() // a manifest whose write never landed
+    val err = intercept[IllegalStateException](table.all())
+    assert(err.getMessage.contains("names neither"))
+    assert(table.dsAt(2L).collect().toSet == Set(("a", 1L)), "older versions still read")
   }
 }
